@@ -28,8 +28,16 @@ object SparkEntry {
     * tags rows ±1, groups once by the full row, and folds
     * Σ|cntA−cntB| — identical value (same grouping equality
     * semantics as exceptAll), half the passes, one shuffle (r7).
+    * The helper columns `__t`/`__d`/`__ca` are reserved: an input
+    * column of that name (case-insensitive, as Spark resolves it) would
+    * be overwritten by the ±1 tag and the rows mis-grouped, so it is
+    * refused.
     */
   private[graft] def symDiffAndCount(a: DataFrame, b: DataFrame): (Long, Long) = {
+    val clash = a.columns.filter(c =>
+      Seq("__t", "__d", "__ca").exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"symDiffAndCount: input column(s) " +
+      s"${clash.mkString(", ")} collide with its reserved helper columns")
     val cols = a.columns.toSeq.map(col)
     val row = a.withColumn("__t", lit(1L))
       .unionByName(b.select(cols: _*).withColumn("__t", lit(-1L)))

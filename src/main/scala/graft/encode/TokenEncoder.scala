@@ -1,6 +1,6 @@
 package graft.encode
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.codec.{BlockCodec, ByteBuf, ByteReader}
 import graft.model.{EncodedBlock, LineageRecord, TokenRow}
@@ -33,16 +33,13 @@ import graft.model.{EncodedBlock, LineageRecord, TokenRow}
   * The reference's only partitioner is file-split by size or by field
   * value (undatum/cmds/selector.py:264-335); this is its scale-out
   * generalization.
+  *
+  * Block assembly (`encodeBlocks`): one exchange routes partId p to
+  * reducer p mod n (n = spark.sql.shuffle.partitions, an explicit
+  * count AQE never coalesces), so every task gets an equal share of
+  * every source's salts; a within-partition sort by partId then
+  * chunks each contiguous partId run into bounded blocks.
   */
-/** Shuffle-side row shape: tokens pre-packed as zigzag varints on the
-  * map side, roughly halving shuffle volume (our regimes average ~2
-  * varint bytes/token vs 4 raw) — the shuffle is the encode pipeline's
-  * main memory-bandwidth consumer. Top-level: nested case classes
-  * break Catalyst's generated-code constructor calls.
-  */
-final case class PackedRow(partId: Int, doc_id: String,
-                           source: String, tok: Array[Byte], n_tok: Int)
-
 object TokenEncoder {
 
   final case class EncodeConfig(
@@ -130,14 +127,24 @@ object TokenEncoder {
     * Salting only needs approximate per-source counts, so the plan
     * pass samples (seeded => deterministic) instead of scanning the
     * full input — at 10^12 rows a full count pass just for the plan
-    * would be a second read of the whole table.
+    * would be a second read of the whole table. Each task counts its
+    * share of the sample and the driver merges the per-task counts: at
+    * most (#tasks × #sources) small rows, so no exchange is needed.
     */
   def partitionPlan(ds: Dataset[TokenRow], targetRowsPerPart: Int,
                     sampleFraction: Double = 0.05): Map[String, (Int, Int)] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
     val frac = math.min(1.0, math.max(sampleFraction, 0.0001))
     val counts = ds.sample(withReplacement = false, frac, seed = 42L)
-      .groupBy("source").count()
-      .collect().map(r => (r.getString(0), math.max(1L, (r.getLong(1) / frac).toLong)))
+      .select("source").as[String]
+      .mapPartitions { srcs =>
+        val m = scala.collection.mutable.HashMap.empty[String, Long]
+        srcs.foreach(s => m(s) = m.getOrElse(s, 0L) + 1L)
+        m.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .map { case (src, n) => (src, math.max(1L, (n / frac).toLong)) }
       .sortBy(_._1)
     var base = 0
     counts.map { case (src, n) =>
@@ -179,21 +186,41 @@ object TokenEncoder {
       case None => overflowSlotOf(plan, r.source)
     }
 
-  /** Encode the given logical partitions (all when `only` is None) into
-    * EncodedBlock rows. One shuffle (groupByKey on partId); each group
-    * is streamed and chunked into bounded blocks, so executor memory is
-    * O(blockTokens), not O(partition).
-    */
   def newRunId(): String =
     f"r${System.currentTimeMillis()}%011x${scala.util.Random.nextInt(0xFFFF)}%04x"
 
-  private def packTokens(tokens: Array[Int], n: Int): Array[Byte] = {
-    val out = new ByteBuf(n * 2 + 8)
-    var i = 0
-    while (i < n) { out.writeZigZag(tokens(i)); i += 1 }
-    out.toArray
+  /** For each reducer r < n, the smallest int key that Spark's
+    * HashPartitioning sends to r (pmod(murmur3(k, seed 42), n)):
+    * routing partId p by key(p mod n) places it on reducer p mod n.
+    */
+  private[graft] def reducerKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var found = 0
+    var k = 0
+    while (found < n) {
+      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(k, 42) % n
+      val r = if (h < 0) h + n else h
+      if (keys(r) < 0) { keys(r) = k; found += 1 }
+      k += 1
+    }
+    keys
   }
 
+  /** Encode the given logical partitions (all when `only` is None) into
+    * EncodedBlock rows. Rows keyed (partId, row) are exchanged so that
+    * reducer r holds every partId ≡ r (mod n) — n balanced tasks, each
+    * with an equal share of every source's salts — then sorted by
+    * partId within the partition (stable: a partId's rows keep their
+    * shuffle-read order) and streamed into bounded blocks, so executor
+    * memory is O(blockTokens), not O(partition). blockIds are
+    * `$runId-$partId-$blockSeq`, blockSeq restarting at 0 per partId.
+    *
+    * `noShuffle` skips only the exchange: each input partition is
+    * sorted and chunked the same way, blockIds carry the task
+    * partition index (`$runId-$partId-p$taskPid-$blockSeq`, blockSeq
+    * counting per task) because one partId may emit blocks from
+    * several input partitions.
+    */
   def encodeBlocks(ds: Dataset[TokenRow], plan: Map[String, (Int, Int)],
                    cfg: EncodeConfig, only: Option[Set[Int]] = None,
                    runId: String = newRunId()): Dataset[EncodedBlock] = {
@@ -203,64 +230,45 @@ object TokenEncoder {
     val cfgB = cfg
     val runIdB = runId
     // partIdOf (two string hashes + plan lookup) runs ONCE per row:
-    // the resume filter and the keying map are fused, rather than
-    // hashing every row twice on the resumed ingest path
+    // the resume filter and the keying map are fused
     val onlyB = only
-    def keep(p: Int): Boolean = onlyB.forall(_.contains(p))
-    val packed = ds.flatMap { r =>
+    val keyed = ds.flatMap { r =>
       val p = partIdOf(planB, r)
-      if (keep(p))
-        Some(PackedRow(p, r.doc_id, r.source, packTokens(r.tokens, r.n_tok), r.n_tok))
-      else None
+      if (onlyB.forall(_.contains(p))) Some((p, r)) else None
     }
-    if (cfgB.noShuffle)
-      // no exchange: a within-partition sort clusters each input
-      // partition's rows by partId, then contiguous runs chunk into
-      // partId-pure blocks. blockIds carry the task partition index —
-      // the same partId may emit blocks from several input partitions.
-      // Rows stay as raw token arrays: the varint pack exists to
-      // halve SHUFFLE bytes, and with no shuffle the pack+unpack
-      // passes are pure overhead
-      ds.flatMap { r =>
-          val p = partIdOf(planB, r)
-          if (keep(p)) Some((p, r)) else None
-        }
-        .sortWithinPartitions("_1")
-        .mapPartitions { rows =>
-          val buf = rows.buffered
-          val taskPid = org.apache.spark.TaskContext.getPartitionId()
-          new Iterator[EncodedBlock] {
-            private var blockSeq = 0
-            def hasNext: Boolean = buf.hasNext
-            def next(): EncodedBlock = {
-              val partId = buf.head._1
-              val b = fillBlockRaw(buf, cfgB, runIdB, partId,
-                s"$runIdB-$partId-p$taskPid-$blockSeq", blockSeq)
-              blockSeq += 1
-              b
-            }
+    val routed =
+      if (cfgB.noShuffle) keyed
+      else {
+        val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val route = element_at(array(reducerKeys(n).map(lit): _*),
+          pmod($"_1", lit(n)) + 1)
+        keyed.repartition(n, route)
+      }
+    routed.sortWithinPartitions("_1").mapPartitions { rows =>
+      val buf = rows.buffered
+      val tag =
+        if (cfgB.noShuffle) s"-p${org.apache.spark.TaskContext.getPartitionId()}"
+        else ""
+      new Iterator[EncodedBlock] {
+        private var partId = -1
+        private var blockSeq = 0
+        def hasNext: Boolean = buf.hasNext
+        def next(): EncodedBlock = {
+          if (buf.head._1 != partId) {
+            partId = buf.head._1
+            if (!cfgB.noShuffle) blockSeq = 0
           }
-        }
-    else packed
-      .groupByKey(_.partId)
-      .flatMapGroups { (partId: Int, rows: Iterator[PackedRow]) =>
-        val buf = rows.buffered
-        new Iterator[EncodedBlock] {
-          private var blockSeq = 0
-          def hasNext: Boolean = buf.hasNext
-          def next(): EncodedBlock = {
-            val b = fillBlock(buf, cfgB, runIdB, partId,
-              s"$runIdB-$partId-$blockSeq", blockSeq)
-            blockSeq += 1
-            b
-          }
+          val b = fillBlock(buf, cfgB, runIdB, partId,
+            s"$runIdB-$partId$tag-$blockSeq", blockSeq)
+          blockSeq += 1
+          b
         }
       }
+    }
   }
 
   /** Mutable accumulation state for one block under construction. */
   private final class BlockAcc(cfgB: EncodeConfig) {
-    val t0: Long = System.nanoTime()
     val docIds = new scala.collection.mutable.ArrayBuffer[String]()
     val srcs = new scala.collection.mutable.ArrayBuffer[String]()
     val lens = new ByteBuf(4096)
@@ -277,35 +285,12 @@ object TokenEncoder {
   }
 
   /** Pull rows off `buf` into one encoded block: stops at block-size
-    * limits or when the head row's partId changes (the no-shuffle
-    * path's run boundary; in the grouped path every row shares the
-    * partId, so the condition is vacuous there).
+    * limits or when the head row's partId changes. Token arrays copy
+    * straight into the block buffer.
     */
-  private def fillBlock(buf: BufferedIterator[PackedRow], cfgB: EncodeConfig,
-                        runIdB: String, partId: Int, blockId: String,
-                        blockSeq: Int): EncodedBlock = {
-    val a = new BlockAcc(cfgB)
-    while (buf.hasNext && buf.head.partId == partId && !a.full) {
-      val r = buf.next()
-      a.docIds += r.doc_id
-      a.srcs += r.source
-      a.lens.writeVarInt(r.n_tok)
-      a.ensure(r.n_tok)
-      val tr = new ByteReader(r.tok)
-      var k = 0
-      while (k < r.n_tok) { a.tokBuf(a.nTok + k) = tr.readZigZag(); k += 1 }
-      a.nTok += r.n_tok
-      a.nRows += 1
-    }
-    sealBlock(a, cfgB, runIdB, partId, blockId, blockSeq)
-  }
-
-  /** Raw-row variant for the no-shuffle path: token arrays copy
-    * straight into the block buffer (no varint round trip).
-    */
-  private def fillBlockRaw(buf: BufferedIterator[(Int, TokenRow)],
-                           cfgB: EncodeConfig, runIdB: String, partId: Int,
-                           blockId: String, blockSeq: Int): EncodedBlock = {
+  private def fillBlock(buf: BufferedIterator[(Int, TokenRow)],
+                        cfgB: EncodeConfig, runIdB: String, partId: Int,
+                        blockId: String, blockSeq: Int): EncodedBlock = {
     val a = new BlockAcc(cfgB)
     while (buf.hasNext && buf.head._1 == partId && !a.full) {
       val r = buf.next()._2
@@ -323,7 +308,9 @@ object TokenEncoder {
   private def sealBlock(a: BlockAcc, cfgB: EncodeConfig, runIdB: String,
                         partId: Int, blockId: String,
                         blockSeq: Int): EncodedBlock = {
-    val t0 = a.t0
+    // the clock starts once the rows are in: encodeMillis measures the
+    // block's own work, not the wait on the upstream iterator
+    val t0 = System.nanoTime()
     val docIds = a.docIds
     val srcs = a.srcs
     val lens = a.lens
@@ -517,7 +504,10 @@ object TokenEncoder {
       // readback validation and avoids recomputing the encode.
       // Filtering on this run's id excludes stale blocks from crashed
       // (uncommitted) runs.
-      val written = spark.read.parquet(s"$outDir/blocks")
+      // The schema is pinned so no job is spent inferring it from
+      // parquet footers.
+      val written = spark.read.schema(Encoders.product[EncodedBlock].schema)
+        .parquet(s"$outDir/blocks")
         .where($"runId" === runId)
       val lineage = written.select(
         lit(cfg.inputFile).as("inputFile"),
@@ -536,15 +526,18 @@ object TokenEncoder {
       // visible. A crash before/inside this write re-encodes the
       // unmarked partIds under a new runId; readers filter on marked
       // (partId, runId) pairs, so the stale attempt never surfaces.
+      // One file: the markers are a few small rows.
       pending.toSeq.sorted.toDF("partId")
         .withColumn("runId", lit(runId))
+        .coalesce(1)
         .write.mode("append").parquet(s"$outDir/completed")
       // return ONLY this run's lineage (blockIds are runId-prefixed).
       // A pending-partId semi-join alone would also sweep in orphan
       // rows a previous CRASHED run landed for the same partIds,
       // double-counting totalTokens/rawBytes in callers aggregating
       // the return (Bench, CorpusPipelineCli).
-      spark.read.parquet(s"$outDir/lineage")
+      spark.read.schema(Encoders.product[LineageRecord].schema)
+        .parquet(s"$outDir/lineage")
         .where($"blockId".startsWith(runId + "-")).as[LineageRecord]
     } finally if (cfg.cacheInput) cached.unpersist(blocking = false)
   }

@@ -68,11 +68,13 @@ object ColumnStats {
   * lengths are the per-row n_tok (invariant n_tok == tokens.length).
   */
 final case class EncodedBlock(
-    blockId: String,      // shuffled: s"$runId-$partId-$blockSeq"; no-shuffle:
-                          // s"$runId-$partId-p$taskPid-$blockSeq" (one partId
-                          // can emit blocks from several input partitions, so
-                          // blockSeq alone is NOT a per-partId sequence there
-                          // — order/dedupe by blockId, never by blockSeq).
+    blockId: String,      // shuffled: s"$runId-$partId-$blockSeq", blockSeq
+                          // restarting at 0 per partId; no-shuffle:
+                          // s"$runId-$partId-p$taskPid-$blockSeq", blockSeq
+                          // counting per task (one partId can emit blocks
+                          // from several input partitions, so blockSeq alone
+                          // is NOT a per-partId sequence there — order/dedupe
+                          // by blockId, never by blockSeq).
                           // runId keys a crashed attempt's blocks as distinct
     runId: String,
     partId: Int,          // logical encode-partition (resume unit)
@@ -97,7 +99,9 @@ final case class EncodedBlock(
     rawBytes: Long,       // 4 * totalTokens
     encodedBytes: Long,   // symtab + payload + lengthsEnc
     metaBytes: Long,      // docIdsEnc + sourcesEnc + docBloomEnc
-    encodeMillis: Long,   // kernel time for this block (throughput metric)
+    encodeMillis: Long,   // time to seal this block once its rows are in:
+                          // stats, codec selection, kernel, zstd, sidecars
+                          // (excludes the wait on upstream rows)
     checksum: Long        // order-sensitive hash of the token stream
 )
 

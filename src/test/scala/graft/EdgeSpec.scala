@@ -131,4 +131,18 @@ class EdgeSpec extends SparkSpecBase {
     val (e, en) = graft.SparkEntry.symDiffAndCount(a.limit(0), b)
     assert(e == 3L && en == 0L)
   }
+
+  test("symDiffAndCount refuses inputs carrying its reserved helper columns") {
+    // a `__t` input column would be overwritten by the ±1 tag, so two
+    // different tables would compare equal — it must fail loudly
+    val s = spark
+    import s.implicits._
+    for (name <- Seq("__t", "__d", "__ca", "__T")) {
+      val a = Seq((1L, 5L), (2L, 6L)).toDF("id", name)
+      val b = Seq((1L, 7L), (2L, 8L)).toDF("id", name)
+      val e = intercept[IllegalArgumentException](
+        graft.SparkEntry.symDiffAndCount(a, b))
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
 }
