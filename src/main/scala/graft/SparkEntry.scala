@@ -50,6 +50,37 @@ object SparkEntry {
     (row.getLong(0), row.getLong(1))
   }
 
+  /** (n_new, n_missed, n_survive) of a [[Dedup.bloomFlag]]ged batch:
+    * the contract check AND the survivor count in ONE action over ONE
+    * left join. Keyed on the bloom's ACTUAL domain — the 8-byte
+    * Dedup.normKey hash, not raw text (the contract is defined over
+    * the hash; a text key would shuffle the whole corpus for the same
+    * guarantee). oldKeys is DISTINCT, so the left join multiplies
+    * nothing and `__hit` null ⟺ the hash is absent from the corpus —
+    * exactly incrementalDedupFlagged's anti-join arm, so n_survive =
+    * unflagged rows + flagged rows that verify novel. A row whose
+    * `maybe_dup` is null is neither (incrementalDedupFlagged drops
+    * it), so the flags are read through coalesce, not SQL's
+    * three-valued `||` (where null || true is true).
+    */
+  private[graft] def bloomIncrementalCounts(old: DataFrame, flagged: DataFrame,
+                                            textCol: String): (Long, Long, Long) = {
+    val oldKeys = old.select(Dedup.normKey(col(textCol)).as("__h")).distinct()
+      .withColumn("__hit", lit(true))
+    val dup = coalesce(col("maybe_dup"), lit(false))
+    val novel = coalesce(!col("maybe_dup"), lit(false))
+    val row = flagged
+      .withColumn("__h", Dedup.normKey(col(textCol)))
+      .join(oldKeys, Seq("__h"), "left")
+      .agg(count(lit(1)).cast("long").as("n_new"),
+        sum(when(novel && coalesce(col("__hit"), lit(false)), 1L)
+          .otherwise(0L)).cast("long").as("n_missed"),
+        sum(when(novel || (dup && col("__hit").isNull), 1L)
+          .otherwise(0L)).cast("long").as("n_survive"))
+      .collect()(0)
+    (row.getLong(0), row.getLong(1), row.getLong(2))
+  }
+
   /** ANN query vectors, collected ONCE per (sf dir) and memoized for
     * the life of the JVM. The five q_ann_* forms (plus their bench
     * twins) previously each ran a tiny filter-collect Spark job to pull
@@ -1218,31 +1249,8 @@ object SparkEntry {
       // LOWERS the false-positive rate; the oracled values are
       // fp-independent
       val flagged = Dedup.bloomFlag(old, nw, "text", expectedOldItems = 1 << 20)
-      // Contract check AND survivor count in ONE action over ONE
-      // left join (r7; previously two actions over a persisted
-      // frame). Keyed on the bloom's ACTUAL domain — the 8-byte
-      // Dedup.normKey hash, not raw text (the contract is defined
-      // over the hash; a text key would shuffle the whole corpus for
-      // the same guarantee). oldKeys is DISTINCT, so the left join
-      // multiplies nothing and `__hit` null ⟺ the hash is absent
-      // from the corpus — exactly incrementalDedupFlagged's
-      // anti-join arm, so n_survive = unflagged rows + flagged rows
-      // that verify novel (the operator itself stays covered by
-      // BloomDedupSpec; the oracled values are unchanged).
-      val oldKeys = old.select(Dedup.normKey(col("text")).as("__h")).distinct()
-        .withColumn("__hit", lit(true))
-      val row = flagged
-        .withColumn("__h", Dedup.normKey(col("text")))
-        .join(oldKeys, Seq("__h"), "left")
-        .agg(count(lit(1)).cast("long").as("n_new"),
-          sum(when(!col("maybe_dup") && coalesce(col("__hit"), lit(false)), 1L)
-            .otherwise(0L)).cast("long").as("n_missed"),
-          sum(when(!col("maybe_dup") || col("__hit").isNull, 1L)
-            .otherwise(0L)).cast("long").as("n_survive"))
-        .collect()(0)
-      val total = row.getLong(0)
-      val missed = row.getLong(1)
-      val survivors = row.getLong(2)
+      val (total, missed, survivors) =
+        bloomIncrementalCounts(old, flagged, "text")
       Seq((total, total - survivors, missed, survivors))
         .toDF("n_new", "n_dup", "n_missed", "n_survive")
     }),

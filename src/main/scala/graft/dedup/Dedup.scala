@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimHash
 
@@ -135,10 +136,11 @@ object Dedup {
     // project the documented (id, sh, sig) shape — no downstream
     // consumer reads the text, and staging it would re-serialize the
     // whole corpus into the stage write
-    withSignatures(df, idCol, textCol, shingleN)
+    val staged = withSignatures(df, idCol, textCol, shingleN)
       .select("id", "sh", "sig")
-      .write.mode("overwrite").parquet(stagePath)
-    df.sparkSession.read.parquet(stagePath)
+    staged.write.mode("overwrite").parquet(stagePath)
+    // the schema just written: no footer-inference job on read-back
+    df.sparkSession.read.schema(staged.schema).parquet(stagePath)
   }
 
   /** Full minhash near-dup pipeline over ONE staged corpus read. */
@@ -173,6 +175,17 @@ object Dedup {
 
   /** Candidate generation over a prepared (id, sh, sig) table.
     *
+    * The skew cap is ONE windowed pass: the band rows go through an
+    * explicit-count `repartition(n, band, bucket)` (n =
+    * `spark.sql.shuffle.partitions`; a REPARTITION_BY_NUM exchange,
+    * which AQE never coalesces, so the window runs on n tasks), one
+    * window over (band, bucket) ranks rows by id and counts the
+    * bucket, and rows past `maxBucket` or in singleton buckets drop.
+    * The surviving ids of each bucket are collected into a list —
+    * at most `maxBucket` long — on the same partitioning (no second
+    * exchange) and exploded into id pairs, so no (band, bucket)
+    * self-join re-ranks the band rows on each side.
+    *
     * `capObs`: an [[org.apache.spark.sql.Observation]] that surfaces
     * what the maxBucket skew cap drops FROM THE QUERY ITSELF —
     * `rows_dropped` (bucket rows truncated) and `max_bucket_rows`
@@ -190,25 +203,31 @@ object Dedup {
     require(k % nBands == 0)
     require(k == graft.functions.MinHashSig.K,
       s"native signature kernel is fixed at k=${graft.functions.MinHashSig.K}")
+    val nParts = withSig.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val banded = bandedBuckets(withSig, k, nBands)
-    // cap pathological buckets (boilerplate text floods a bucket);
-    // capObs reports what the cap drops (minhashBucketDiag is the
-    // standalone form)
+      .repartition(nParts, col("band"), col("bucket"))
+    // cap pathological buckets (boilerplate text floods a bucket) in
+    // one pass: rank and bucket size share one window (the frames
+    // differ, the partition and order specs do not); capObs reports
+    // what the cap drops (minhashBucketDiag is the standalone form)
+    val w = Window.partitionBy("band", "bucket").orderBy("id")
     val ranked = banded
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "bucket").orderBy("id")))
+      .withColumn("rn", row_number().over(w))
+      .withColumn("n", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
     val observed = capObs.fold(ranked)(o => ranked.observe(o,
       sum(when(col("rn") > maxBucket, 1L).otherwise(0L)).as("rows_dropped"),
       max(col("rn")).cast("long").as("max_bucket_rows")))
-    val capped = observed.where(col("rn") <= maxBucket)
     // candidates as BARE id pairs: deduping rows that carry the
     // shingle arrays would shuffle kilobytes per pair; arrays join
-    // back once per unique pair instead
-    val a = capped.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = capped.select(col("band"), col("bucket"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("band", "bucket")).where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+    // back once per unique pair instead. Singleton buckets never pair.
+    val ids = observed.where(col("rn") <= maxBucket && col("n") >= 2)
+      .groupBy("band", "bucket").agg(collect_list("id").as("ids"))
+    val cand = ids
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .where(col("id_a") < col("id_b"))
+      .dropDuplicates("id_a", "id_b")
     val cut = threshold - estMargin
     if (estMargin < 0 || cut <= 0) cand
     else {
@@ -605,9 +624,13 @@ object Dedup {
   private def dropClusterLosers(df: DataFrame, idCol: String,
                                 pairs: DataFrame,
                                 checkpointDir: Option[String] = None): DataFrame = {
+    // no distinct: both CC arms return one row per id (the driver
+    // union-find emits its parent map's keys; the iterative arm's
+    // labels start from distinct ids and each sweep left-joins them
+    // to per-id aggregates), so the losers are already unique
     val losers = connectedComponents(pairs, checkpointDir = checkpointDir)
       .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol)).distinct()
+      .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -785,7 +808,10 @@ object Dedup {
 
   /** Pair generation from a precomputed (id, h) simhash table.
     * `capObs` surfaces the skew cap's drops in-query — see
-    * minhashCandidatesSigned.
+    * minhashCandidatesSigned. The cap stays a window + self-join
+    * rather than minhash's one-pass list: the oracled form runs
+    * uncapped, and an unbounded `collect_list` would hold a whole hot
+    * bucket in one buffer.
     */
   def simhashPairsFromHashes(withH: DataFrame, maxHamming: Int = 3,
                              maxBucket: Int = 256,

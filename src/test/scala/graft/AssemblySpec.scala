@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.encode.TokenEncoder
@@ -23,50 +18,6 @@ class AssemblySpec extends SparkSpecBase {
 
   private def shufflePartitions: Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-  /** Jobs and completed stages of everything `body` runs, tagged by a
-    * job group. Listener events are delivered in order, so once a
-    * sentinel job submitted after `body` is seen, every event of
-    * `body` has been seen too.
-    */
-  private final case class JobRec(id: Int, sqlExecution: Boolean, stageIds: Seq[Int])
-  private final case class StageRec(id: Int, tasks: Int, shuffleReadRecords: Long)
-
-  private def traceJobs[T](body: => T): (T, Seq[JobRec], Seq[StageRec]) = {
-    val group = s"assembly-${System.nanoTime()}"
-    val sentinel = group + "-sentinel"
-    val jobs = new ConcurrentLinkedQueue[JobRec]()
-    val stages = new ConcurrentLinkedQueue[StageRec]()
-    @volatile var sawSentinel = false
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group)
-          jobs.add(JobRec(e.jobId,
-            e.properties.getProperty("spark.sql.execution.id") != null, e.stageIds))
-        if (g == sentinel) sawSentinel = true
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        stages.add(StageRec(i.stageId, i.numTasks,
-          i.taskMetrics.shuffleReadMetrics.recordsRead))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "traced")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sawSentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sawSentinel, "listener never saw the sentinel job")
-      val js = jobs.asScala.toSeq.sortBy(_.id)
-      val ours = js.flatMap(_.stageIds).toSet
-      (out, js, stages.asScala.toSeq.filter(s => ours.contains(s.id)))
-    } finally sc.removeSparkListener(l)
-  }
 
   test("block assembly runs n tasks and reducer r holds only partIds = r mod n") {
     import spark.implicits._

@@ -145,4 +145,28 @@ class EdgeSpec extends SparkSpecBase {
       assert(e.getMessage.contains(name), e.getMessage)
     }
   }
+
+  test("q_bloom_incremental's folded n_survive counts null-text rows as the operator does") {
+    val s = spark
+    import s.implicits._
+    val old = Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, null: String))
+      .toDF("doc_id", "text")
+    val batch = Seq((10L, "alpha beta"), (11L, "novel text"), (12L, null: String))
+      .toDF("doc_id", "text")
+    // null text against a corpus with and without a null-text row
+    for (o <- Seq(old, old.where(col("text").isNotNull))) {
+      val flagged = graft.dedup.Dedup.bloomFlag(o, batch, "text", expectedOldItems = 1 << 10)
+      val (n, missed, survive) = graft.SparkEntry.bloomIncrementalCounts(o, flagged, "text")
+      assert(n == 3L && missed == 0L)
+      assert(survive == graft.dedup.Dedup.incrementalDedupFlagged(o, flagged, "text").count())
+    }
+    // a null flag (the probe had no answer) is neither unflagged nor a
+    // verified-novel row: the operator drops it, so must the fold
+    val nullFlag = batch.withColumn("maybe_dup",
+      when(col("doc_id") === 12L, lit(null).cast("boolean")).otherwise(col("doc_id") === 10L))
+    val clean = old.where(col("text").isNotNull)
+    val (_, _, survive) = graft.SparkEntry.bloomIncrementalCounts(clean, nullFlag, "text")
+    assert(survive == graft.dedup.Dedup.incrementalDedupFlagged(clean, nullFlag, "text").count())
+    assert(survive == 1L)
+  }
 }
